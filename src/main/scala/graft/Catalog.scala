@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** SQL surface: register the driver tables as temp views (plus the graft
-  * native functions) so the whole engine is usable from plain
-  * `spark.sql(...)` — the catalog queries' DataFrame plans and ad-hoc SQL
-  * compose over the same relations.
+/** SQL surface: register the driver tables as temp views so the whole
+  * engine is usable from plain `spark.sql(...)` — the catalog queries'
+  * DataFrame plans and ad-hoc SQL compose over the same relations. The
+  * native functions and the top-N rewrite come with the session
+  * ([[GraftExtensions]]), not from here.
   */
 object Catalog {
 
@@ -18,9 +19,9 @@ object Catalog {
   private val registeredDir = java.util.Collections
     .synchronizedMap(new java.util.WeakHashMap[SparkSession, String]())
 
-  /** Register every driver table under its name for the given scale dir,
-    * the native function registry, and the top-N rewrite. Cached per
-    * (session, dir) — repeated sql() calls don't re-read parquet footers.
+  /** Register every driver table under its name for the given scale dir.
+    * Cached per (session, dir) — repeated sql() calls don't re-read
+    * parquet footers.
     */
   def registerViews(spark: SparkSession, dir: String): Unit =
     // synchronized on the session (same monitor as Tables.events): two
@@ -29,8 +30,6 @@ object Catalog {
     spark.synchronized {
       if (registeredDir.get(spark) != dir) {
         TableNames.foreach(n => Tables(spark, dir, n).createOrReplaceTempView(n))
-        functions.VectorFunctions.register(spark)
-        plans.GroupedTopK.registerRewrite(spark)
         registeredDir.put(spark, dir)
       }
     }

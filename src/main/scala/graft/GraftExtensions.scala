@@ -2,45 +2,51 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{FloatDotProduct, NfcNormalize, ZOrder2}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import graft.functions._
+import graft.ops.Similarity
+import graft.plans.{
+  GroupedTopKStrategy, PartitionPrefixSumStrategy, SortedGroupReduceStrategy, WindowToTopKRule
+}
 
-/** Session extension registering the engine's native expressions so SQL
-  * users get them without touching the Scala API:
+/** The engine's one registration seam: every native function, planner
+  * strategy and optimizer rule is installed here when a session is built,
+  * so plans never depend on which API a session happened to call first.
+  * [[graft.Sessions.builder]] applies it to every graft session; an
+  * external session opts in with
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *   SELECT graft_dot_f(a.embedding, b.embedding) FROM ...
   *
-  * (The Scala surface registers the same functions lazily per session via
-  * [[graft.functions.VectorFunctions.register]].)
+  * A session built without it cannot resolve the `graft_*` names and
+  * fails to plan the custom operators (an INTERNAL_ERROR caused by
+  * "No plan for GroupedTopK ...").
+  * The Scala Column helpers are thin `call_function` wrappers over the
+  * names registered here.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("graft_dot_f"),
-      new ExpressionInfo(classOf[FloatDotProduct].getName, "graft_dot_f"),
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_dot_f requires exactly 2 arguments, got ${exprs.length}")
-        FloatDotProduct(exprs.head, exprs(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      exprs => {
-        require(exprs.length == 1,
-          s"graft_nfc requires exactly 1 argument, got ${exprs.length}")
-        NfcNormalize(exprs.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_zorder2"),
-      new ExpressionInfo(classOf[ZOrder2].getName, "graft_zorder2"),
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_zorder2 requires exactly 2 arguments, got ${exprs.length}")
-        ZOrder2(exprs.head, exprs(1))
-      }))
-    e.injectPlannerStrategy(_ => graft.plans.GroupedTopKStrategy)
-    e.injectOptimizerRule(_ => graft.plans.WindowToTopKRule)
+    def fn(name: String, cls: Class[_], arity: Int)(build: Seq[Expression] => Expression): Unit =
+      e.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        exprs => {
+          require(exprs.length == arity,
+            s"$name requires exactly $arity argument${if (arity == 1) "" else "s"}, " +
+              s"got ${exprs.length}")
+          build(exprs)
+        }))
+    fn("graft_dot_f", classOf[FloatDotProduct], 2)(a => FloatDotProduct(a(0), a(1)))
+    fn("graft_dot_l", classOf[LongDotProduct], 2)(a => LongDotProduct(a(0), a(1)))
+    fn("graft_sqdist_l", classOf[LongSqDist], 2)(a => LongSqDist(a(0), a(1)))
+    fn("graft_nfc", classOf[NfcNormalize], 1)(a => NfcNormalize(a(0)))
+    fn("graft_zorder2", classOf[ZOrder2], 2)(a => ZOrder2(a(0), a(1)))
+    fn("graft_sorted_key_sum", classOf[SortedKeySum], 3)(a => SortedKeySum(a(0), a(1), a(2)))
+    fn("graft_mmr_select", classOf[MmrSelect], 1)(a =>
+      MmrSelect(a(0), Similarity.MmrK, Similarity.MmrLambda, Similarity.MmrMu))
+    e.injectPlannerStrategy(_ => GroupedTopKStrategy)
+    e.injectPlannerStrategy(_ => PartitionPrefixSumStrategy)
+    e.injectPlannerStrategy(_ => SortedGroupReduceStrategy)
+    e.injectOptimizerRule(_ => WindowToTopKRule)
   }
 }

@@ -11,6 +11,9 @@ import org.apache.spark.sql.SparkSession
   * the shapes the bench actually times. Every graft main now builds its
   * session here; the adopted defaults live in exactly one place.
   *
+  * Every session it builds carries [[GraftExtensions]], the one place
+  * native functions, strategies and the top-k rewrite are registered.
+  *
   * Adopted defaults and why:
   *   - `spark.sql.adaptive.enabled=true` — AQE stage reuse + skew-join
   *     splitting; default since 3.2, stated for clarity.
@@ -45,6 +48,7 @@ object Sessions {
     // default locale, DuckDB's doesn't (tr_TR dotless-i would diverge)
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val b = SparkSession.builder()
+      .withExtensions(new GraftExtensions)
       .master(master)
       .config("spark.sql.shuffle.partitions", partitions)
       .config("spark.sql.adaptive.enabled", "true")

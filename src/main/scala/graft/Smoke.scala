@@ -390,6 +390,15 @@ object Smoke {
       println(s"SMOKE CATALOG DRIFT: no-oracle=$d1 no-query=$d2")
       bad += 1
     }
+    // GraftExtensions is the only registration seam: a query that adds
+    // to the session's experimental hooks makes later plans depend on
+    // which query ran first
+    val exp   = spark.experimental
+    val hooks = exp.extraStrategies ++ exp.extraOptimizations
+    if (hooks.nonEmpty) {
+      println(s"SMOKE SESSION HOOKS: ${hooks.mkString(", ")}")
+      bad += 1
+    }
     println(s"smoke: ${SparkEntry.queries.size} queries, $bad failures")
     spark.stop()
     if (bad > 0) sys.exit(1)

@@ -102,19 +102,7 @@ case class SortedKeySum(first: Expression, second: Expression, third: Expression
 }
 
 object SortedKeySumFunction {
-  /** Idempotent per-session registration; returns a Column-level handle. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_key_sum",
-      exprs => {
-        require(exprs.length == 3,
-          s"graft_sorted_key_sum requires exactly 3 arguments, got ${exprs.length}")
-        SortedKeySum(exprs(0), exprs(1), exprs(2))
-      },
-      "scala_udf")
-
-  def sortedKeySum(spark: SparkSession, keys: Column, vals: Column, qKeys: Column): Column = {
-    register(spark)
+  /** Column handle for `graft_sorted_key_sum`, registered by [[graft.GraftExtensions]]. */
+  def sortedKeySum(spark: SparkSession, keys: Column, vals: Column, qKeys: Column): Column =
     call_function("graft_sorted_key_sum", keys, vals, qKeys)
-  }
 }

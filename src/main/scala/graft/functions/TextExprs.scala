@@ -62,19 +62,6 @@ object NfcNormalize {
 }
 
 object TextFunctions {
-  /** Idempotent per-session registration; returns a Column-level handle. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc",
-      exprs => {
-        require(exprs.length == 1,
-          s"graft_nfc requires exactly 1 argument, got ${exprs.length}")
-        NfcNormalize(exprs.head)
-      },
-      "scala_udf")
-
-  def nfc(spark: SparkSession, s: Column): Column = {
-    register(spark)
-    call_function("graft_nfc", s)
-  }
+  /** Column handle for `graft_nfc`, registered by [[graft.GraftExtensions]]. */
+  def nfc(spark: SparkSession, s: Column): Column = call_function("graft_nfc", s)
 }

@@ -230,46 +230,13 @@ case class LongSqDist(left: Expression, right: Expression)
 }
 
 object VectorFunctions {
-  /** Idempotent per-session registration; returns a Column-level handle. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_f",
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_dot_f requires exactly 2 arguments, got ${exprs.length}")
-        FloatDotProduct(exprs.head, exprs(1))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_l",
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_dot_l requires exactly 2 arguments, got ${exprs.length}")
-        LongDotProduct(exprs.head, exprs(1))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sqdist_l",
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_sqdist_l requires exactly 2 arguments, got ${exprs.length}")
-        LongSqDist(exprs.head, exprs(1))
-      },
-      "scala_udf")
-  }
-
-  def dotF(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  /** Column handles for the functions [[graft.GraftExtensions]] registers. */
+  def dotF(spark: SparkSession, a: Column, b: Column): Column =
     call_function("graft_dot_f", a, b)
-  }
 
-  def dotL(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def dotL(spark: SparkSession, a: Column, b: Column): Column =
     call_function("graft_dot_l", a, b)
-  }
 
-  def sqDistL(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def sqDistL(spark: SparkSession, a: Column, b: Column): Column =
     call_function("graft_sqdist_l", a, b)
-  }
 }

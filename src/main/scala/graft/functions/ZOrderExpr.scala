@@ -71,19 +71,7 @@ object ZOrder2 {
 }
 
 object ZOrderFunctions {
-  /** Idempotent per-session registration; returns a Column-level handle. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_zorder2",
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_zorder2 requires exactly 2 arguments, got ${exprs.length}")
-        ZOrder2(exprs.head, exprs(1))
-      },
-      "scala_udf")
-
-  def zorder2(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  /** Column handle for `graft_zorder2`, registered by [[graft.GraftExtensions]]. */
+  def zorder2(spark: SparkSession, a: Column, b: Column): Column =
     call_function("graft_zorder2", a, b)
-  }
 }

@@ -46,11 +46,8 @@ object MRRunner {
     // spec can exercise main's validation without a session to stop)
     require(MRApps.all.contains(appName),
       s"unknown app '$appName'; registered: ${MRApps.all.keys.toSeq.sorted.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", nreduce)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Sessions
+      .builder(sys.env.getOrElse("SPARK_MASTER", "local[4]"), nreduce.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, appName, input, outDir, nreduce)

@@ -438,9 +438,12 @@ object Graph {
     * volume grows linearly with the fact table; existing edges leave via
     * a hash anti-join; the cap compiles to TakeOrderedAndProject. Middle
     * degrees ≥ 2 by construction (a wedge middle has two distinct
-    * neighbors), so ln(deg) never divides by zero. Adamic-Adar terms
-    * quantize onto decimal(38,9) before the sum (order-free-sum rule);
-    * the ranking never consults a double.
+    * neighbors), so ln(deg) never divides by zero. Each middle's
+    * Adamic-Adar term quantizes onto decimal(18,9) and crosses the wedge
+    * aggregate as its unscaled long image (an exact, order-free long
+    * sum), reassembled as decimal(38,9) afterwards; [[CnAaMaxCn]] keeps
+    * that sum provably wrap-free and fails loudly past it. The ranking
+    * never consults a double.
     */
   def commonNeighbors(pairList: DataFrame): DataFrame =
     commonNeighborsSplit(pairList, CnHotDeg, CnSaltK)
@@ -834,8 +837,11 @@ object Graph {
     * path hands in the memoized [[coPurchaseAdj]] directly (r15, guide
     * §2.4: [[bfs]] used to re-symmetrize + re-checkpoint the identical
     * adjacency the LPA family already memoizes, one |E|-block copy per
-    * invocation). Never frees its input (the caller owns it); same
-    * every-second-round checkpoint cadence as [[sssp]].
+    * invocation). Never frees its input (the caller owns it). Like
+    * [[sssp]] it checkpoints only the final round: the adjacency is
+    * pre-partitioned on the join key, so each round joins it
+    * shuffle-free, and the unmaterialized `dist` subtree (referenced
+    * twice per round) stays small at the default [[BfsRounds]].
     */
   private[ops] def bfsOverAdj(adj: DataFrame, seeds: DataFrame,
       rounds: Int = BfsRounds): DataFrame = {

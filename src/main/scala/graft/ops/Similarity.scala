@@ -281,14 +281,6 @@ object Similarity {
     // |Q|-group collect, and an explode — no materialization anywhere.
     // collect_list order is partition-dependent, but the selection is
     // argmax-based with total tiebreaks, so its output is order-invariant.
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_mmr_select",
-      exprs => {
-        require(exprs.length == 1,
-          s"graft_mmr_select requires exactly 1 argument, got ${exprs.length}")
-        graft.functions.MmrSelect(exprs.head, MmrK, MmrLambda, MmrMu)
-      },
-      "scala_udf")
     val cand = bruteRanked(s, dir, MmrPool)
       .select(col("va"), col("vb"), col("cos").as("rel"))
     val e = withNorm(Tables.embeddings(s, dir))

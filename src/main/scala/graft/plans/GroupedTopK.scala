@@ -2,7 +2,7 @@ package graft.plans
 
 import scala.collection.mutable
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
@@ -37,8 +37,9 @@ import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
   *
   * The reference has no window machinery at all (SURVEY.md §2.3), so
   * this is the (c)-tier custom-operator path from the design brief:
-  * LogicalPlan + Strategy + SparkPlan, injectable via
-  * [[graft.GraftExtensions]] or `spark.experimental.extraStrategies`.
+  * LogicalPlan + Strategy + SparkPlan, installed by
+  * [[graft.GraftExtensions]] together with [[WindowToTopKRule]], which
+  * routes the `row_number() <= k` window idiom here.
   */
 case class GroupedTopK(
     groupKeys: Seq[Expression],
@@ -261,30 +262,6 @@ object GroupedTopK {
   val SpillThresholdKey     = "spark.graft.topk.spillThresholdBytes"
   val SpillThresholdDefault: String = (64L * 1024 * 1024).toString
 
-  /** Idempotent registration of the planner strategy only — what the
-    * Scala `topK` API needs. The window-rewrite rule is a separate,
-    * explicit opt-in ([[registerRewrite]] / [[graft.GraftExtensions]] /
-    * [[graft.Catalog.registerViews]]) so sessions that want to exercise
-    * Spark's own window operator aren't silently rerouted.
-    */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(GroupedTopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GroupedTopKStrategy
-
-  /** Opt in to the transparent row_number-top-N rewrite. */
-  def registerRewrite(spark: SparkSession): Unit = {
-    register(spark)
-    if (!spark.experimental.extraOptimizations.contains(WindowToTopKRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ WindowToTopKRule
-  }
-
-  /** Remove the rewrite (the strategy is harmless to leave). */
-  def unregisterRewrite(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == WindowToTopKRule)
-
   /** Top `k` rows per `keys` group under `order` (column name → ascending?),
     * with a 1-based rank column appended. Names become catalyst
     * `UnresolvedAttribute`s; the analyzer resolves them against the child
@@ -317,7 +294,6 @@ object GroupedTopK {
         .withColumn(rankName, row_number().over(Window.orderBy(orderCols: _*)).cast("long"))
     }
     val spark = df.sparkSession
-    register(spark)
     val sortOrders = order.map { case (name, asc) =>
       SortOrder(UnresolvedAttribute.quoted(name), if (asc) Ascending else Descending)
     }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
@@ -223,11 +223,6 @@ object PartitionPrefixSum {
     */
   val MaxTieRun: Int = 16 << 20
 
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(PartitionPrefixSumStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ PartitionPrefixSumStrategy
-
   /** Append (`pidName`, `cumName`) — the partition id and the in-order
     * RANGE-frame running sum of `sumCol` within each (partition, groups)
     * cell. The caller owns the partitioning (typically
@@ -244,7 +239,6 @@ object PartitionPrefixSum {
       lastName: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     val spark = df.sparkSession
-    register(spark)
     val analyzed = df.queryExecution.analyzed
     def resolve(name: String): Attribute = analyzed.output
       .find(a => spark.sessionState.conf.resolver(a.name, name))

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Ascending, Attribute, AttributeReference, AttributeSet, SortOrder, UnsafeProjection
@@ -40,7 +40,8 @@ import graft.mr.MRApp
   * exec — impossible on the RDD path's fixed partitioner.
   *
   * Same (c)-tier custom-operator pattern as [[GroupedTopK]]: LogicalPlan +
-  * Strategy + UnaryExecNode, registered idempotently per session.
+  * Strategy + UnaryExecNode; the strategy is installed with the session
+  * by [[graft.GraftExtensions]].
   */
 case class SortedGroupReduce(
     app: MRApp,
@@ -165,21 +166,12 @@ object SortedGroupReduce {
     AttributeReference("key", StringType, nullable = false)(),
     AttributeReference("value", StringType, nullable = false)())
 
-  /** Idempotent per-session strategy registration (the [[GroupedTopK]]
-    * pattern).
-    */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(SortedGroupReduceStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ SortedGroupReduceStrategy
-
   /** Plan `app`'s reduce over a `(key, value)` string pair frame. The
     * shuffle + secondary sort are left to EnsureRequirements — the whole
     * reduce side lives inside the SQL engine.
     */
   def reduce(kvs: DataFrame, app: MRApp): DataFrame = {
     val spark = kvs.sparkSession
-    register(spark)
     require(kvs.schema.length == 2 &&
       kvs.schema.forall(_.dataType == StringType),
       s"SortedGroupReduce needs a (string key, string value) child, got ${kvs.schema}")

@@ -14,8 +14,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
   *
   * into the sort-free [[GroupedTopK]] operator. Users keep writing the
   * standard window formulation; plans silently lose the per-partition
-  * sort. Registered through [[graft.GraftExtensions]] (optimizer rule) or
-  * [[GroupedTopK.register]] (`spark.experimental.extraOptimizations`).
+  * sort. Installed in every session by [[graft.GraftExtensions]]; a query
+  * that needs Spark's own window plan excludes it through
+  * `spark.sql.optimizer.excludedRules`.
   *
   * Deliberately strict match: exactly one window expression, a bare
   * row_number (no cast between it and the filter), and a literal bound —

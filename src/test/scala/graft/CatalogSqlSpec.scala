@@ -3,7 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SQL surface: temp-view registration, native functions from SQL,
-  * and the optimizer rewrite applying to plain SQL text.
+  * and the optimizer rewrite applying to plain SQL text. The functions
+  * and the rewrite come with the session ([[GraftExtensions]]), so the
+  * function cases below call no Scala API first.
   */
 class CatalogSqlSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -27,7 +29,6 @@ class CatalogSqlSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("graft_dot_f raises on mismatched array lengths (DuckDB parity)") {
-    Catalog.registerViews(spark, Sf0001)
     val e = intercept[Throwable] {
       spark.sql(
         "SELECT graft_dot_f(array(CAST(1.0 AS FLOAT)), array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)))")
@@ -39,11 +40,31 @@ class CatalogSqlSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("graft_dot_f yields NULL on a null array element (DuckDB parity)") {
-    Catalog.registerViews(spark, Sf0001)
     val row = spark.sql(
       "SELECT graft_dot_f(array(CAST(1.0 AS FLOAT), CAST(NULL AS FLOAT)), " +
         "array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT))) AS d").head()
     assert(row.isNullAt(0), s"expected NULL, got ${row.get(0)}")
+  }
+
+  test("every other native function resolves from plain SQL") {
+    val r = spark.sql("""SELECT
+        graft_dot_l(array(1L, 2L), array(3L, 4L)) AS dl,
+        graft_sqdist_l(array(1L, 2L), array(3L, 5L)) AS sq,
+        graft_nfc(decode(unhex('65CC81'), 'UTF-8')) = decode(unhex('C3A9'), 'UTF-8') AS nfc,
+        graft_zorder2(1L, 2L) AS z,
+        graft_sorted_key_sum(array('a', 'b', 'c'), array(1L, 2L, 4L),
+          array('b', 'c', 'd')) AS sks,
+        graft_mmr_select(array(named_struct('vb', 7L, 'rel', 0.5D,
+          'eb', array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), 'nb', 1.0D))) AS mmr
+      """).head()
+    assert(r.getLong(0) == 11L)
+    assert(r.getLong(1) == 13L)
+    assert(r.getBoolean(2), "graft_nfc left the decomposed form unchanged")
+    assert(r.getLong(3) == 9L) // a=1 on bit 0, b=2 on bit 3
+    assert(r.getLong(4) == 6L)
+    val pick = r.getSeq[org.apache.spark.sql.Row](5).map(p =>
+      (p.getLong(0), p.getLong(1), p.getDouble(2), p.getDouble(3)))
+    assert(pick == Seq((7L, 1L, 0.5, 0.5)), pick)
   }
 
   test("SQL top-N-per-group text hits the custom operator via the rewrite rule") {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-JVM chaos harness (round 15, verdict stretch item): the one
   * storage property the single-JVM block-wipe analogue (CkptSpec) cannot
   * fully prove is survival of GENUINE executor loss — a separate executor
@@ -20,12 +18,10 @@ import org.apache.spark.sql.SparkSession
   */
 object ChaosCluster {
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir   = args.headOption.getOrElse("/root/testdata/sf0.01")
     val query = args.drop(1).headOption.getOrElse("graph_pagerank")
     val ckptDir = java.nio.file.Files.createTempDirectory("graft-chaos-ckpt")
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,2,1024]")
+    val spark = Sessions.builder("local-cluster[2,2,1024]", "8")
       // executor JVMs need the test classpath (graft classes + spark +
       // scala) — hand them exactly this JVM's classpath, the standard
       // Spark-internal-test idiom for local-cluster
@@ -38,10 +34,6 @@ object ChaosCluster {
           "--add-opens=java.base/sun.nio.ch=ALL-UNNAMED " +
           "--add-opens=java.base/sun.util.calendar=ALL-UNNAMED " +
           "--add-opens=java.base/sun.security.action=ALL-UNNAMED")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config(Ckpt.ReliableKey, "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -176,14 +176,14 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
 
   test("round-8 top-k queries push the group limit below the shuffle") {
     // sketch build (per-source bottom-k), pair-union top-k, and the
-    // hard-negative per-query top-k must all compile to partial+final
-    // WindowGroupLimit (or the GroupedTopK physical op) — a plain
+    // hard-negative per-query top-k must all compile to the GroupedTopK
+    // physical op (every session carries WindowToTopKRule) — a plain
     // WindowExec here sorts a source's/query's full candidate set in one
     // task, the single-task-sort scale-killer
     for (q <- Seq("source_overlap_kmv", "sim_hard_negatives")) {
       val p = plan(q)
-      assert(p.contains("GroupedTopK") || p.contains("WindowGroupLimit"),
-        s"$q has no pushed group limit:\n$p")
+      assert(p.contains("GroupedTopK") && !p.contains("WindowGroupLimit"),
+        s"$q did not plan the sort-free GroupedTopK:\n$p")
     }
     // corpus_shards' global rank must be the range-partitioned sweep,
     // never a single-partition window over the corpus
@@ -481,18 +481,14 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("text_bm25: partial+final WindowGroupLimit top-k, broadcast query maps, no pair shuffle") {
+  test("text_bm25: GroupedTopK top-k, broadcast query maps, no pair shuffle") {
     val p = plan("text_bm25")
     // the per-query top-k must never regress to a full per-query sort —
     // one skewed q_doc would then sort O(corpus) rows in a single task.
-    // Two group-limited shapes are sanctioned, both partial+final: the
-    // repo's GroupedTopK (WindowToTopKRule fires once the optimizer
-    // unwraps rn's cast("long"); active in Catalog/driver sessions and
-    // when another suite leaves the rewrite registered) and Spark's
-    // InferWindowGroupLimit pair (plain sessions).
-    assert(
-      p.contains("GroupedTopK") || p.split("WindowGroupLimit").length - 1 == 2,
-      s"text_bm25 top-k regressed to a full per-query sort:\n$p")
+    // The sort-free GroupedTopK is the one shape: the scorer calls it
+    // directly, and no window (grouped-limited or not) may remain.
+    assert(p.contains("GroupedTopK") && !p.contains("Window"),
+      s"text_bm25 top-k regressed from GroupedTopK:\n$p")
     // dense-regime scorer: the query term arrays must be the broadcast
     // side of the |D|×|Q| expansion — a pair-level shuffle would mean
     // the formulation regressed to shuffling scored pairs
@@ -512,9 +508,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     assert(p.contains("BroadcastHashJoin"), p)
     assert(p.contains("REPARTITION_BY_COL"), s"postings lost the doc_id repartition:\n$p")
     assert(p.contains("partial_sum"), p)
-    assert(
-      p.contains("GroupedTopK") || p.split("WindowGroupLimit").length - 1 == 2,
-      s"bm25Postings top-k regressed to a full per-query sort:\n$p")
+    assert(p.contains("GroupedTopK") && !p.contains("Window"),
+      s"bm25Postings top-k regressed from GroupedTopK:\n$p")
   }
 
   test("rangeCum family: range-partitioned prefix sum, never a per-group whole-grid sort") {
@@ -690,14 +685,13 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     for (m <- "Sort \\[event_type[^\\]]*g#[^\\]]*\\], true".r.findAllIn(pm))
       fail(s"stats_mad: global per-group whole-grid sort is back: $m\n$pm")
     // sim_pq_topk: the query×codeword lookup table broadcasts onto the
-    // code stream, and the per-query top-k must stay group-limited
-    // (partial+final WindowGroupLimit or GroupedTopK), never a full
-    // per-query sort of all candidates
+    // code stream, and the per-query row_number top-k must plan as the
+    // sort-free GroupedTopK (WindowToTopKRule, carried by every
+    // session), never a per-query sort of all candidates
     val pt = plan("sim_pq_topk")
     assert(pt.contains("BroadcastHashJoin"), pt)
-    assert(
-      pt.contains("GroupedTopK") || pt.split("WindowGroupLimit").length - 1 == 2,
-      s"sim_pq_topk top-k regressed to a full per-query sort:\n$pt")
+    assert(pt.contains("GroupedTopK") && !pt.contains("WindowGroupLimit"),
+      s"sim_pq_topk top-k regressed from GroupedTopK:\n$pt")
   }
 
   test("text_normalize is a pure scan-side projection (no exchange at all)") {

@@ -10,6 +10,7 @@ trait SparkTestBase {
   lazy val spark: SparkSession = {
     val s = SparkSession
       .builder()
+      .withExtensions(new GraftExtensions)
       .master("local[4,2]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")

@@ -12,14 +12,18 @@ class GroupedTopKSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
   test("bit-identical to the window row_number formulation") {
-    // make sure the rewrite is off so windowTopkOrders exercises Spark's
-    // real window operator (other suites may have registered it)
-    GroupedTopK.unregisterRewrite(spark)
     val fast = Relational.windowTopkFast(spark, Sf0001)
       .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
-    val win = Relational.windowTopkOrders(spark, Sf0001)
-      .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
-    assert(fast == win)
+    // the session carries the rewrite; exclude it so the reference runs
+    // Spark's real window operator
+    withSQLConf("spark.sql.optimizer.excludedRules" -> WindowToTopKRule.ruleName) {
+      val winDf = Relational.windowTopkOrders(spark, Sf0001)
+      val opt = winDf.queryExecution.optimizedPlan.toString
+      assert(!opt.contains("GroupedTopK") && opt.contains("Window"), opt)
+      val win = winDf
+        .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
+      assert(fast == win)
+    }
   }
 
   test("physical plan shuffles on the key but never sorts") {
@@ -33,7 +37,6 @@ class GroupedTopKSpec extends AnyFunSuite with SparkTestBase {
   test("optimizer rule rewrites bare row_number+filter into GroupedTopK") {
     import org.apache.spark.sql.expressions.{Window => W}
     import org.apache.spark.sql.functions._
-    GroupedTopK.registerRewrite(spark)
     val w = W.partitionBy("o_custkey").orderBy(desc("o_totalprice"), asc("o_orderkey"))
     val df = graft.Tables.orders(spark, Sf0001)
       .withColumn("rn", row_number().over(w))
@@ -52,7 +55,6 @@ class GroupedTopKSpec extends AnyFunSuite with SparkTestBase {
   test("optimizer rule leaves non-matching window shapes alone") {
     import org.apache.spark.sql.expressions.{Window => W}
     import org.apache.spark.sql.functions._
-    GroupedTopK.registerRewrite(spark)
     // rank() has different tie semantics than row_number — must NOT rewrite
     val w = W.partitionBy("o_custkey").orderBy(desc("o_totalprice"))
     val df = graft.Tables.orders(spark, Sf0001)
@@ -83,16 +85,13 @@ class GroupedTopKSpec extends AnyFunSuite with SparkTestBase {
 
   test("rewrite rule leaves rn < Int.MinValue (always-false) to Spark") {
     import org.apache.spark.sql.functions._
-    GroupedTopK.registerRewrite(spark)
-    try {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("k").orderBy("v")
-      val df = Seq((1L, 1.0)).toDF("k", "v")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") < Int.MinValue)
-      assert(!df.queryExecution.optimizedPlan.toString.contains("GroupedTopK"))
-      assert(df.count() == 0)
-    } finally GroupedTopK.unregisterRewrite(spark)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("k").orderBy("v")
+    val df = Seq((1L, 1.0)).toDF("k", "v")
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") < Int.MinValue)
+    assert(!df.queryExecution.optimizedPlan.toString.contains("GroupedTopK"))
+    assert(df.count() == 0)
   }
 
   test("map-typed grouping keys are rejected") {
